@@ -225,22 +225,22 @@ object Bench {
     // min of two timed executions per query: co-tenant load on this host
     // is bursty and one-sided (stalls only ever ADD time), so a single
     // sample can catch a multi-second steal window; the min estimates
-    // steady-state operator cost
-    val results = sorted.map { case (name, fn) =>
-      val secs = (1 to 2).map { _ =>
-        val (_, sec) = time {
-          try fn(s1, sfDir).count()
-          catch { case _: Throwable => -1L }
-        }
-        sec
-      }
-      name -> secs.min
+    // steady-state operator cost. A query that throws is a failure: it is
+    // listed under "failed" and gives no time to the total.
+    val timed = sorted.map { case (name, fn) =>
+      name -> scala.util.Try((1 to 2).map(_ => time(fn(s1, sfDir).count())._2).min)
     }
+    val results = timed.collect { case (name, scala.util.Success(sec)) => name -> sec }
+    val failed = timed.collect { case (name, scala.util.Failure(e)) =>
+      System.err.println(s"[bench] query $name failed: $e")
+      name
+    }
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     // local-iteration mode: print the query table and stop before the
     // pipeline/scaling sections (the driver never sets this)
     if (sys.env.contains("SPARK_GRAFT_BENCH_QUERIES_ONLY")) {
       val qj = results.map { case (n, t) => s""""$n":$t""" }.mkString(",")
-      println(s"""{"metric":"queries_only","value":${results.map(_._2).sum},"unit":"sec","queries":{$qj},"sf":"$sfDir","load_avg_1m":${
+      println(s"""{"metric":"queries_only","value":${results.map(_._2).sum},"unit":"sec","queries":{$qj},"failed":$failedJson,"sf":"$sfDir","load_avg_1m":${
         try scala.io.Source.fromFile("/proc/loadavg").mkString.split(" ")(0).toDouble
         catch { case _: Throwable => -1.0 }}}""")
       s1.stop()
@@ -466,7 +466,7 @@ object Bench {
     // line that always fits; "detail" names the sidecar.
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL", "BENCH_DETAIL.json")
     val fullJson =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir","load_avg_1m":$loadAvg%.2f,"pipeline":{"tiles":$nTiles,"tiles_per_sec_2":$thr2%.2f,"tiles_per_sec_8":$thr8%.2f,"tiles_per_sec_32":$thr32%.2f,"sec_1":$sec1%.2f,"sec_4":$sec4%.2f,"sec_2":$sec2%.2f,"sec_8":$sec8%.2f,"sec_32":$sec32%.2f,"raw_1":${arr(raw1)},"raw_4":${arr(raw4)},"raw_2":${arr(raw2)},"raw_8":${arr(raw8)},"raw_32":${arr(raw32)},"load_raw_1":${larr(1)},"load_raw_4":${larr(4)},"load_raw_2":${larr(2)},"load_raw_8":${larr(8)},"load_raw_32":${larr(32)},"scaling_efficiency":$eff2to8%.3f,"scaling_efficiency_1_to_4":$eff1to4%.3f,"scaling_efficiency_8_to_32":$eff8to32%.3f},"pipeline10x":{"tiles":$tiles10x,"sec_8":$sec10_8%.2f,"sec_32":$sec10_32%.2f,"tiles_per_sec_8":$thr10_8%.2f,"tiles_per_sec_32":$thr10_32%.2f,"raw_8":${arr(acc10(8))},"raw_32":${arr(acc10(32))},"load_raw_8":${arr(load10(8))},"load_raw_32":${arr(load10(32))},"scaling_efficiency_8_to_32":$eff10_8to32%.3f,"scaleup_throughput_ratio_32":$scaleUp32%.3f},"metrics":$pmJson}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"failed":$failedJson,"sf":"$sfDir","load_avg_1m":$loadAvg%.2f,"pipeline":{"tiles":$nTiles,"tiles_per_sec_2":$thr2%.2f,"tiles_per_sec_8":$thr8%.2f,"tiles_per_sec_32":$thr32%.2f,"sec_1":$sec1%.2f,"sec_4":$sec4%.2f,"sec_2":$sec2%.2f,"sec_8":$sec8%.2f,"sec_32":$sec32%.2f,"raw_1":${arr(raw1)},"raw_4":${arr(raw4)},"raw_2":${arr(raw2)},"raw_8":${arr(raw8)},"raw_32":${arr(raw32)},"load_raw_1":${larr(1)},"load_raw_4":${larr(4)},"load_raw_2":${larr(2)},"load_raw_8":${larr(8)},"load_raw_32":${larr(32)},"scaling_efficiency":$eff2to8%.3f,"scaling_efficiency_1_to_4":$eff1to4%.3f,"scaling_efficiency_8_to_32":$eff8to32%.3f},"pipeline10x":{"tiles":$tiles10x,"sec_8":$sec10_8%.2f,"sec_32":$sec10_32%.2f,"tiles_per_sec_8":$thr10_8%.2f,"tiles_per_sec_32":$thr10_32%.2f,"raw_8":${arr(acc10(8))},"raw_32":${arr(acc10(32))},"load_raw_8":${arr(load10(8))},"load_raw_32":${arr(load10(32))},"scaling_efficiency_8_to_32":$eff10_8to32%.3f,"scaleup_throughput_ratio_32":$scaleUp32%.3f},"metrics":$pmJson}"""
     try java.nio.file.Files.write(java.nio.file.Paths.get(detailPath),
       (fullJson + "\n").getBytes("UTF-8"))
     catch { case e: Throwable => System.err.println(s"[bench] detail write failed: $e") }
@@ -483,6 +483,6 @@ object Bench {
     val slowest = results.sortBy(-_._2).take(3)
       .map { case (n, v) => "\"" + n + f"\":$v%.3f" }.mkString("{", ",", "}")
     println(
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","sf":"$sfDir","queries_count":${results.size},"queries":$hq,"slowest":$slowest,"load_avg_1m":$loadAvg%.2f,"pipeline":{"tiles":$nTiles,"tiles_per_sec_2":$thr2%.2f,"tiles_per_sec_8":$thr8%.2f,"tiles_per_sec_32":$thr32%.2f,"sec_1":$sec1%.2f,"sec_4":$sec4%.2f,"sec_2":$sec2%.2f,"sec_8":$sec8%.2f,"sec_32":$sec32%.2f,"scaling_efficiency":$eff2to8%.3f,"scaling_efficiency_1_to_4":$eff1to4%.3f,"scaling_efficiency_8_to_32":$eff8to32%.3f},"pipeline10x":{"tiles":$tiles10x,"sec_8":$sec10_8%.2f,"sec_32":$sec10_32%.2f,"tiles_per_sec_8":$thr10_8%.2f,"tiles_per_sec_32":$thr10_32%.2f,"scaling_efficiency_8_to_32":$eff10_8to32%.3f,"scaleup_throughput_ratio_32":$scaleUp32%.3f},"detail":"$detailPath"}""")
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","sf":"$sfDir","queries_count":${results.size},"queries":$hq,"failed":$failedJson,"slowest":$slowest,"load_avg_1m":$loadAvg%.2f,"pipeline":{"tiles":$nTiles,"tiles_per_sec_2":$thr2%.2f,"tiles_per_sec_8":$thr8%.2f,"tiles_per_sec_32":$thr32%.2f,"sec_1":$sec1%.2f,"sec_4":$sec4%.2f,"sec_2":$sec2%.2f,"sec_8":$sec8%.2f,"sec_32":$sec32%.2f,"scaling_efficiency":$eff2to8%.3f,"scaling_efficiency_1_to_4":$eff1to4%.3f,"scaling_efficiency_8_to_32":$eff8to32%.3f},"pipeline10x":{"tiles":$tiles10x,"sec_8":$sec10_8%.2f,"sec_32":$sec10_32%.2f,"tiles_per_sec_8":$thr10_8%.2f,"tiles_per_sec_32":$thr10_32%.2f,"scaling_efficiency_8_to_32":$eff10_8to32%.3f,"scaleup_throughput_ratio_32":$scaleUp32%.3f},"detail":"$detailPath"}""")
   }
 }

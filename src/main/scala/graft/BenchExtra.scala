@@ -7,9 +7,10 @@ import org.apache.spark.sql.SparkSession
   * frozen driver contract. Times individual SparkEntry queries with a
   * per-job breakdown so optimization targets the right stage:
   *
-  *   SPARK_GRAFT_EXTRA_QUERIES=q23_cdc_apply,s4_stream_join \
-  *     sbt "runMain graft.BenchExtra"
+  *   sbt "runMain graft.BenchExtra q23_cdc_apply,s4_stream_join"
   *
+  * The comma-separated query list is the first argument, else
+  * SPARK_GRAFT_EXTRA_QUERIES, else every SparkEntry query.
   * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32),
   * SPARK_GRAFT_EXTRA_REPS (timed reps after one warm pass, default 2),
   * SPARK_GRAFT_EXTRA_JOBS=1 to print every Spark job (wall, description).
@@ -43,8 +44,9 @@ object BenchExtra {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val reps = sys.env.getOrElse("SPARK_GRAFT_EXTRA_REPS", "2").toInt
     val logJobs = sys.env.contains("SPARK_GRAFT_EXTRA_JOBS")
-    val names = sys.env.getOrElse("SPARK_GRAFT_EXTRA_QUERIES", "")
-      .split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    val names = args.headOption.orElse(sys.env.get("SPARK_GRAFT_EXTRA_QUERIES"))
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+      .getOrElse(SparkEntry.queries.keys.toSeq.sorted)
     val spark = Bench.session(cpus, coalesce = true)
     val jl = new JobLog
     spark.sparkContext.addSparkListener(jl)

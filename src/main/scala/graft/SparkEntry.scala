@@ -4303,8 +4303,8 @@ object SparkEntry {
        |FROM vals GROUP BY 1 ORDER BY 1""".stripMargin
   }
 
-  /** Ray-casting point-in-polygon as SQL, bit-identical to
-    * RefKernel.pointInPolygon (same operand order in the cross test). */
+  /** Ray-casting point-in-polygon as SQL, bit-identical to the RefKernel
+    * oracle's ray cast (same operand order in the cross test). */
   private def pipSql(xs: Array[Double], ys: Array[Double]): String = {
     val terms = (1 until xs.length).map { i =>
       val j = i - 1
@@ -6733,7 +6733,7 @@ object SparkEntry {
     // r57: the composed surface by linear precision — stations sit on the
     // plane 4 + x/4 + y/2, Delaunay reproduces it, and the oracle is the
     // plane at every pixel center inside the bankline polygon (the same
-    // ray-cast PIP expression ClipPolygon's kernel evaluates)
+    // crossing rule ClipPolygon's scanline kernel evaluates)
     "r57_line2surface" -> {
       val pip = pipSql(Array(0.0, 48.0, 50.0, 1.0, 0.0),
         Array(3.0, 5.0, 29.0, 25.0, 3.0))

@@ -18,9 +18,10 @@ object RefKernel {
   /** Ray-casting even-odd point-in-polygon on a closed or open ring.
     * Matches the pixel-center-inside rule of the reference's rasterize
     * (GDAL all_touched=False, `Raster.py:330-333`); boundary behavior is the
-    * standard crossing convention (lower-inclusive in y). This exact
-    * function is also used by the engine's burn kernel so engine and oracle
-    * share one boundary convention. */
+    * standard crossing convention (lower-inclusive in y). The engine's
+    * scanline kernel (`Rasterize.scanRow`) computes the same crossings
+    * from the same formula, so engine and oracle share one boundary
+    * convention. */
   def pointInPolygon(px: Double, py: Double, xs: Array[Double], ys: Array[Double]): Boolean = {
     var inside = false
     val n = xs.length

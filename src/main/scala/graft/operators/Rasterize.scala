@@ -10,13 +10,14 @@ import graft.core._
   *
   *   features --cell_cover generator--> (cell_id, feature)   [explode]
   *        join/groupBy cell_id                               [shuffle]
-  *   per-cell burn kernel: pixel-center point-in-polygon,
+  *   per-cell burn kernel: pixel-center scanline (`scanRow`),
   *   features applied in seq order so the LATER feature wins [kernel]
   *
   * The shuffle key is the Z-ordered cell id, so at 100TB this is a
   * range-bucketed exchange; with few features the cover side is tiny and
-  * broadcast; hot cells (many features) are handled by AQE + optional
-  * salting of the cover explode (`saltBuckets`).
+  * broadcast; hot cells (many distinct features) are split by `burn` into
+  * `salt` row-interleaved shards, the factor picked by `autoSalt` (driver)
+  * or `autoSaltFromCover` (distributed).
   */
 object Rasterize {
 
@@ -45,12 +46,6 @@ object Rasterize {
     }
   }
 
-  /** Burn: group cover tasks by cell, run the pixel-center PIP kernel per
-    * cell window (clipped to grid), apply in seq order (last wins —
-    * Raster.py:330 sequential burn). Emits only burned pixels; the
-    * background stays NaN implicitly (out array init, Raster.py:330).
-    * The PIP is the same RefKernel.pointInPolygon the oracle uses — one
-    * boundary convention everywhere. */
   /** Collapse EXACT duplicates (same geometry + same burn value) to the
     * max-seq representative: under sequential last-wins, re-burning an
     * identical shape is a no-op, so this is semantics-preserving — and on
@@ -60,15 +55,41 @@ object Rasterize {
     fs.groupBy(f => (f.value, f.xs.toSeq, f.ys.toSeq))
       .map(_._2.maxBy(_.seq)).toArray.sortBy(_.seq)
 
-  /** Even-odd SCANLINE burn of one pixel row [cFrom, cTo] of a polygon:
-    * bit-identical pixel set to per-pixel [[RefKernel.pointInPolygon]] —
-    * for fixed py the kernel's inside(px) is exactly the PARITY of
-    * {crossing edges : px < xCross}, and the xCross values computed here
-    * are the same doubles from the same formula — but at O(V + m log m +
-    * W) per row instead of O(W * V): the crossing set is built once per
-    * row and a single pointer sweep over the sorted crossings classifies
-    * every pixel center. `emit` receives each inside column. */
-  private def scanRow(xs: Array[Double], ys: Array[Double], py: Double,
+  /** Bounding box of a ring. */
+  private[operators] def bbox(xs: Array[Double], ys: Array[Double]): Extent = {
+    var xmin = Double.MaxValue; var xmax = Double.MinValue
+    var ymin = Double.MaxValue; var ymax = Double.MinValue
+    var k = 0
+    while (k < xs.length) {
+      val x = xs(k); val y = ys(k)
+      if (x < xmin) xmin = x; if (x > xmax) xmax = x
+      if (y < ymin) ymin = y; if (y > ymax) ymax = y
+      k += 1
+    }
+    Extent(xmin, xmax, ymin, ymax)
+  }
+
+  /** Pixels of `ref` whose centres lie in `e`, inside rows [r0, r1] and
+    * columns [c0, c1]: (fr0, fr1, fc0, fc1), empty when fr0 > fr1 or
+    * fc0 > fc1. A centre left + (c + 0.5) cs is >= e.left iff
+    * c >= (e.left - left) / cs - 0.5; rows count down from the top. */
+  private[operators] def window(ref: GridRef, e: Extent,
+      r0: Int, r1: Int, c0: Int, c1: Int): (Int, Int, Int, Int) = (
+    math.max(r0, math.ceil((ref.top - e.top) / ref.cellsize - 0.5).toInt),
+    math.min(r1, math.floor((ref.top - e.bottom) / ref.cellsize - 0.5).toInt),
+    math.max(c0, math.ceil((e.left - ref.left) / ref.cellsize - 0.5).toInt),
+    math.min(c1, math.floor((e.right - ref.left) / ref.cellsize - 0.5).toInt))
+
+  /** Even-odd SCANLINE burn of one pixel row [cFrom, cTo] of a polygon,
+    * the engine's one pixel-center inside test: bit-identical pixel set to
+    * the oracle's per-pixel ray cast ([[RefKernel]]) — for fixed py its
+    * inside(px) is exactly the PARITY of {crossing edges : px < xCross},
+    * and the xCross values computed here are the same doubles from the
+    * same formula — but at O(V + m log m + W) per row instead of O(W * V):
+    * the crossing set is built once per row and a single pointer sweep
+    * over the sorted crossings classifies every pixel center. `emit`
+    * receives each inside column. */
+  private[operators] def scanRow(xs: Array[Double], ys: Array[Double], py: Double,
       left: Double, cellsize: Double, cFrom: Int, cTo: Int,
       scratch: Array[Double])(emit: Int => Unit): Unit = {
     val n = xs.length
@@ -97,95 +118,72 @@ object Rasterize {
     }
   }
 
-  def burn(tasks: Dataset[CoverTask], ref: GridRef,
+  /** Burn: group cover tasks by (cell, shard) with shard in [0, salt), run
+    * the pixel-center scanline kernel over the pixel rows r = shard (mod
+    * salt) of the cell window (clipped to grid), and apply features in seq
+    * order (last wins — Raster.py:330 sequential burn). Emits only burned
+    * pixels; the background stays NaN implicitly (out array init,
+    * Raster.py:330). Salting spreads a hot cell (many distinct features on
+    * one cell id) over `salt` tasks while last-wins stays exact: every
+    * pixel still sees ALL its features, in seq order. */
+  def burn(tasks: Dataset[CoverTask], ref: GridRef, salt: Int = 1,
       burnedPx: Option[LongAccumulator] = None): Dataset[CellPx] = {
     import tasks.sparkSession.implicits._
+    require(salt >= 1, s"salt must be >= 1, got $salt")
     val nrows = ref.nrows
     val ncols = ref.ncols
-    tasks.groupByKey(_.cellId).flatMapGroups { (cid, it) =>
-      val fs = dedupTasks(it.toArray)
-      val (r0L, c0L, size) = CellId.pixelWindow(cid)
-      val r0 = r0L.toInt
-      val c0 = c0L.toInt
-      val r1 = math.min(nrows - 1, r0 + size - 1)
-      val c1 = math.min(ncols - 1, c0 + size - 1)
-      val h = r1 - r0 + 1
-      val w = c1 - c0 + 1
-      if (h <= 0 || w <= 0) Iterator.empty
-      else {
-        // per-feature pixel windows (bbox ∩ cell window): pixel centers at
-        // left+(c+0.5)cs are >= xmin iff c >= (xmin-left)/cs-0.5. The burn
-        // buffer is allocated over the UNION of these windows, not the full
-        // cell — a feature rarely fills its cell, so this cuts the 512KB
-        // cell buffer (pure allocation-bandwidth, the local-mode scaling
-        // ceiling) to the burnable sub-window.
-        val wins = new Array[Int](fs.length * 4)
-        var ur0 = Int.MaxValue; var ur1 = Int.MinValue
-        var uc0 = Int.MaxValue; var uc1 = Int.MinValue
-        var fi = 0
-        while (fi < fs.length) {
-          val f = fs(fi)
-          var xmin = Double.MaxValue; var xmax = Double.MinValue
-          var ymin = Double.MaxValue; var ymax = Double.MinValue
-          var k = 0
-          while (k < f.xs.length) {
-            val x = f.xs(k); val y = f.ys(k)
-            if (x < xmin) xmin = x; if (x > xmax) xmax = x
-            if (y < ymin) ymin = y; if (y > ymax) ymax = y
-            k += 1
-          }
-          val fr0 = math.max(r0, math.ceil((ref.top - ymax) / ref.cellsize - 0.5).toInt)
-          val fr1 = math.min(r1, math.floor((ref.top - ymin) / ref.cellsize - 0.5).toInt)
-          val fc0 = math.max(c0, math.ceil((xmin - ref.left) / ref.cellsize - 0.5).toInt)
-          val fc1 = math.min(c1, math.floor((xmax - ref.left) / ref.cellsize - 0.5).toInt)
-          wins(fi * 4) = fr0; wins(fi * 4 + 1) = fr1
-          wins(fi * 4 + 2) = fc0; wins(fi * 4 + 3) = fc1
-          if (fr0 <= fr1 && fc0 <= fc1) {
-            if (fr0 < ur0) ur0 = fr0
-            if (fr1 > ur1) ur1 = fr1
-            if (fc0 < uc0) uc0 = fc0
-            if (fc1 > uc1) uc1 = fc1
-          }
-          fi += 1
-        }
-        if (ur0 > ur1 || uc0 > uc1) Iterator.empty
+    val salted = tasks.flatMap(t => Iterator.tabulate(salt)(s => (s, t)))
+    salted.groupByKey { case (s, t) => (t.cellId, s) }.flatMapGroups {
+      (key: (Long, Int), it: Iterator[(Int, CoverTask)]) =>
+        val (cid, shard) = key
+        val fs = dedupTasks(it.map(_._2).toArray)
+        val (r0L, c0L, size) = CellId.pixelWindow(cid)
+        val r0 = r0L.toInt
+        val c0 = c0L.toInt
+        val r1 = math.min(nrows - 1, r0 + size - 1)
+        val c1 = math.min(ncols - 1, c0 + size - 1)
+        // per-feature pixel windows (bbox ∩ cell window), first row moved
+        // onto this shard. The burn buffer covers the UNION of these
+        // windows, one buffer row per shard row, not the full cell — a
+        // feature rarely fills its cell, so this cuts the 512KB cell buffer
+        // (pure allocation-bandwidth, the local-mode scaling ceiling) to
+        // the burnable sub-window.
+        val live = fs.iterator.map { f =>
+          val (fr0, fr1, fc0, fc1) = window(ref, bbox(f.xs, f.ys), r0, r1, c0, c1)
+          (f, fr0 + Math.floorMod(shard - fr0, salt), fr1, fc0, fc1)
+        }.filter { case (_, fr0, fr1, fc0, fc1) => fr0 <= fr1 && fc0 <= fc1 }.toArray
+        if (live.isEmpty) Iterator.empty
         else {
+          val ur0 = live.map(_._2).min
+          val ur1 = live.map(_._3).max
+          val uc0 = live.map(_._4).min
+          val uc1 = live.map(_._5).max
           val bw = uc1 - uc0 + 1
-          val bh = ur1 - ur0 + 1
+          val bh = (ur1 - ur0) / salt + 1
           val vals = Array.fill(bh * bw)(Double.NaN)
-          var maxV = 0
-          fi = 0
-          while (fi < fs.length) {
-            val l = fs(fi).xs.length
-            if (l > maxV) maxV = l
-            fi += 1
-          }
-          val scratch = new Array[Double](maxV)
-          fi = 0
-          while (fi < fs.length) {
-            val f = fs(fi)
-            val fr1 = wins(fi * 4 + 1)
-            val fc0 = wins(fi * 4 + 2)
-            val fc1 = wins(fi * 4 + 3)
-            var r = wins(fi * 4)
+          val scratch = new Array[Double](live.map(_._1.xs.length).max)
+          live.foreach { case (f, fr0, fr1, fc0, fc1) =>
+            var r = fr0
             while (r <= fr1) {
               val py = ref.top - (r + 0.5) * ref.cellsize
-              val rowBase = (r - ur0) * bw - uc0
+              val rowBase = (r - ur0) / salt * bw - uc0
               scanRow(f.xs, f.ys, py, ref.left, ref.cellsize, fc0, fc1,
                 scratch)(c => vals(rowBase + c) = f.value)
-              r += 1
+              r += salt
             }
-            fi += 1
           }
           // lazy emission: no intermediate CellPx array per cell
           val emit = Iterator.range(0, bh * bw)
             .filter(i => !vals(i).isNaN)
-            .map(i => CellPx(ur0 + i / bw, uc0 + i % bw, vals(i)))
+            .map(i => CellPx(ur0 + i / bw * salt, uc0 + i % bw, vals(i)))
           burnedPx.fold(emit)(acc => emit.map { p => acc.add(1L); p })
         }
-      }
     }
   }
+
+  /** Salt factor for a cell carrying `hot` distinct tasks: one shard per 8
+    * tasks, at most 16. */
+  private def saltFor(hot: Long): Int = math.max(1L, math.min(16L, hot / 8)).toInt
 
   /** Skew statistic -> salt factor: max number of DISTINCT (value,
     * geometry) tasks landing on one cell (exact duplicates collapse in the
@@ -210,8 +208,7 @@ object Rasterize {
         // per-cell increment needs no per-cell dedup key
         CellId.coverPolygon(ref, f.xs.zip(f.ys), res).foreach(perCell(_) += 1)
     }
-    val hot = if (perCell.isEmpty) 0 else perCell.values.max
-    math.max(1, math.min(16, hot / 8))
+    saltFor(if (perCell.isEmpty) 0 else perCell.values.max)
   }
 
   /** The same skew statistic as [[autoSalt]], computed as a cheap
@@ -225,15 +222,13 @@ object Rasterize {
       .groupBy($"cellId")
       .agg(countDistinct(struct($"value", $"xs", $"ys")).as("n"))
       .agg(max($"n")).collect()
-    val hot =
-      if (hotRow.isEmpty || hotRow(0).isNullAt(0)) 0L else hotRow(0).getLong(0)
-    math.max(1, math.min(16, (hot / 8).toInt))
+    saltFor(if (hotRow.isEmpty || hotRow(0).isNullAt(0)) 0L else hotRow(0).getLong(0))
   }
 
   /** End-to-end rasterize: features -> cover -> burn -> burned pixels.
     * Salt is selected AUTOMATICALLY from the hot-cell distinct-task max
-    * (autoSalt); homogeneous covers take the plain single-task-per-cell
-    * path (salt = 1). The driver-Seq form delegates to the Dataset form —
+    * (autoSalt); homogeneous covers burn with one task per cell
+    * (salt = 1). The driver-Seq form delegates to the Dataset form —
     * one distributed cover explode feeds both the skew agg and the burn. */
   def apply(spark: SparkSession, features: Seq[Feature], ref: GridRef,
       res: Int, useAttr: Boolean): Dataset[CellPx] =
@@ -251,7 +246,7 @@ object Rasterize {
     val salt = autoSalt(features, ref, res, useAttr)
     val ds = spark.createDataset(features)(
       org.apache.spark.sql.Encoders.product[Feature])
-    burnSalted(coverDs(ds, ref, res, useAttr), ref, salt, burnedPx)
+    burn(coverDs(ds, ref, res, useAttr), ref, salt, burnedPx)
   }
 
   /** Dataset[Feature] rasterize — the 100 TB ingestion API: cover explode,
@@ -259,87 +254,13 @@ object Rasterize {
     * twice (salt agg + burn) rather than persisted: coverPolygon is cheap
     * next to the PIP burn, recomputation is deterministic, and a persist
     * here would leak one cached dataset per rasterize call (callers can
-    * still persist `coverDs(...)` themselves and use `burnSalted` +
+    * still persist `coverDs(...)` themselves and use `burn` +
     * `autoSaltFromCover` directly when the explode dominates). */
   def apply(features: Dataset[Feature], ref: GridRef,
       res: Int, useAttr: Boolean,
       burnedPx: Option[LongAccumulator] = None): Dataset[CellPx] = {
     val salt = autoSaltFromCover(coverDs(features, ref, res, useAttr))
-    burnSalted(coverDs(features, ref, res, useAttr), ref, salt, burnedPx)
-  }
-
-  /** Explicitly SALTED burn for hot cells (many features on one cell id —
-    * the skew the north rule calls out): every cover task is replicated to
-    * `salt` sub-keys and each (cell, salt) group burns only the pixel rows
-    * with `row % salt == salt_id`, so one hot cell's work spreads across
-    * `salt` tasks while last-wins stays exact (each pixel still sees ALL
-    * its features, in seq order). salt=1 degenerates to the plain burn. */
-  def burnSalted(tasks: Dataset[CoverTask], ref: GridRef, salt: Int,
-      burnedPx: Option[LongAccumulator] = None): Dataset[CellPx] = {
-    import tasks.sparkSession.implicits._
-    if (salt <= 1) burn(tasks, ref, burnedPx)
-    else {
-      val nrows = ref.nrows
-      val ncols = ref.ncols
-      val salted = tasks.flatMap(t => (0 until salt).iterator.map(s => (s, t)))
-      salted.groupByKey { case (s, t) => (t.cellId, s) }.flatMapGroups {
-        (key: (Long, Int), it: Iterator[(Int, CoverTask)]) =>
-          val (cid, s) = key
-          val fs = dedupTasks(it.map(_._2).toArray)
-          val (r0L, c0L, size) = CellId.pixelWindow(cid)
-          val r0 = r0L.toInt
-          val c0 = c0L.toInt
-          val r1 = math.min(nrows - 1, r0 + size - 1)
-          val c1 = math.min(ncols - 1, c0 + size - 1)
-          if (r1 < r0 || c1 < c0) Iterator.empty
-          else {
-            val w = c1 - c0 + 1
-            // bounding boxes once per feature, not per pixel row (burn()
-            // does the same ahead of its pixel loops)
-            val bbox = fs.map { f =>
-              var xmin = Double.MaxValue; var xmax = Double.MinValue
-              var ymin = Double.MaxValue; var ymax = Double.MinValue
-              var k = 0
-              while (k < f.xs.length) {
-                val x = f.xs(k); val y = f.ys(k)
-                if (x < xmin) xmin = x; if (x > xmax) xmax = x
-                if (y < ymin) ymin = y; if (y > ymax) ymax = y
-                k += 1
-              }
-              (xmin, xmax, ymin, ymax)
-            }
-            val out = Array.newBuilder[CellPx]
-            val scratch = new Array[Double](
-              if (fs.isEmpty) 0 else fs.iterator.map(_.xs.length).max)
-            var r = r0 + ((s - (r0 % salt)) % salt + salt) % salt // first row with r % salt == s
-            while (r <= r1) {
-              val rowVals = Array.fill(w)(Double.NaN)
-              var fi = 0
-              while (fi < fs.length) {
-                val f = fs(fi)
-                val (xmin, xmax, ymin, ymax) = bbox(fi)
-                val py = ref.top - (r + 0.5) * ref.cellsize
-                if (py >= ymin && py <= ymax) {
-                  val fc0 = math.max(c0, math.ceil((xmin - ref.left) / ref.cellsize - 0.5).toInt)
-                  val fc1 = math.min(c1, math.floor((xmax - ref.left) / ref.cellsize - 0.5).toInt)
-                  scanRow(f.xs, f.ys, py, ref.left, ref.cellsize, fc0, fc1,
-                    scratch)(c => rowVals(c - c0) = f.value)
-                }
-                fi += 1
-              }
-              var c = 0
-              while (c < w) {
-                if (!rowVals(c).isNaN) out += CellPx(r, c0 + c, rowVals(c))
-                c += 1
-              }
-              r += salt
-            }
-            val emit = out.result()
-            burnedPx.foreach(_.add(emit.length.toLong))
-            emit.iterator
-          }
-      }
-    }
+    burn(coverDs(features, ref, res, useAttr), ref, salt, burnedPx)
   }
 
   /** Burned-pixel DataFrame joined back as a mask/edit layer: the tutorial

@@ -557,10 +557,11 @@ object Bilinear {
 /** clip-by-polygon (reference `Raster.clip`, Raster.py:235-275 =
   * rasterio.mask.mask(crop=True)): a raster<->vector SEMI-JOIN — tiles
   * whose cell cover intersects the polygons survive the cell_id filter
-  * (pruning BEFORE payload work), then a pixel-center PIP mask kernel sets
-  * outside-polygon cells to NaN; crop = drop tiles left with no valid
-  * pixel. Features broadcast (small side); a huge feature set would swap
-  * the semi-join build side. */
+  * (pruning BEFORE payload work), then the burn kernel's pixel-center
+  * scanline ([[Rasterize.scanRow]]) marks the inside pixels and the rest
+  * become NaN; crop = drop tiles left with no valid pixel. Features
+  * broadcast (small side); a huge feature set would swap the semi-join
+  * build side. */
 object ClipPolygon {
   import org.apache.spark.sql.Dataset
   import graft.core._
@@ -571,57 +572,31 @@ object ClipPolygon {
     val cover = features
       .flatMap(f => CellId.coverPolygon(ref, f.xs.zip(f.ys), res))
       .toSet
-    // geometry + precomputed bbox per feature: the mask kernel first
-    // selects ONLY the features whose bbox intersects the tile window
-    // (the burn kernel's trick, Rasterize cover/bbox restriction), so the
-    // per-pixel loop is bounded by the tile's OVERLAP count, not the total
-    // feature count F — at thousands of features the per-pixel O(F) scan
-    // was the kernel's scale hole.
+    // geometry + precomputed bbox per feature: each tile scans ONLY the
+    // features whose bbox holds one of its pixel centres, so the kernel is
+    // bounded by the tile's OVERLAP count, not the total feature count F
     val bc = tiles.sparkSession.sparkContext.broadcast(
-      features.map { f =>
-        var xmin = Double.MaxValue; var xmax = Double.MinValue
-        var ymin = Double.MaxValue; var ymax = Double.MinValue
-        var k = 0
-        while (k < f.xs.length) {
-          val x = f.xs(k); val y = f.ys(k)
-          if (x < xmin) xmin = x; if (x > xmax) xmax = x
-          if (y < ymin) ymin = y; if (y > ymax) ymax = y
-          k += 1
-        }
-        (f.xs, f.ys, xmin, xmax, ymin, ymax)
-      }.toArray)
+      features.map(f => (f.xs, f.ys, Rasterize.bbox(f.xs, f.ys))).toArray)
+    val maxV = features.map(_.xs.length).maxOption.getOrElse(0)
     val cs = ref.cellsize
-    val (gLeft, gTop) = (ref.left, ref.top)
     tiles
       .filter(TileOps.coverPredicate(cover.toArray)) // semi-join Z-range prune
       .map { t =>
-        // candidate features for THIS tile: bbox vs tile pixel-window extent
-        val txMin = gLeft + t.col0 * cs
-        val txMax = gLeft + (t.col0 + t.w) * cs
-        val tyMax = gTop - t.row0 * cs
-        val tyMin = gTop - (t.row0 + t.h) * cs
-        val cand = bc.value.filter { case (_, _, xmin, xmax, ymin, ymax) =>
-          xmax >= txMin && xmin <= txMax && ymax >= tyMin && ymin <= tyMax
-        }
-        val out = new Array[Double](t.payload.length)
-        var i = 0
-        while (i < out.length) {
-          val r = t.row0 + i / t.w
-          val c = t.col0 + i % t.w
-          val px = gLeft + (c + 0.5) * cs
-          val py = gTop - (r + 0.5) * cs
-          var inside = false
-          var k = 0
-          while (k < cand.length && !inside) {
-            val f = cand(k)
-            // per-pixel bbox rejection before the O(vertices) PIP
-            if (px >= f._3 && px <= f._4 && py >= f._5 && py <= f._6)
-              inside = RefKernel.pointInPolygon(px, py, f._1, f._2)
-            k += 1
+        val keep = new Array[Boolean](t.payload.length)
+        val scratch = new Array[Double](maxV)
+        bc.value.foreach { case (xs, ys, e) =>
+          val (fr0, fr1, fc0, fc1) = Rasterize.window(ref, e,
+            t.row0, t.row0 + t.h - 1, t.col0, t.col0 + t.w - 1)
+          var r = fr0
+          while (r <= fr1 && fc0 <= fc1) {
+            val rowBase = (r - t.row0) * t.w - t.col0
+            Rasterize.scanRow(xs, ys, ref.top - (r + 0.5) * cs, ref.left, cs,
+              fc0, fc1, scratch)(c => keep(rowBase + c) = true)
+            r += 1
           }
-          out(i) = if (inside) t.payload(i) else Double.NaN
-          i += 1
         }
+        val out = Array.tabulate(t.payload.length)(i =>
+          if (keep(i)) t.payload(i) else Double.NaN)
         Tile(t.cellId, t.row0, t.col0, t.h, t.w, out)
       }
       .filter(_.validCount > 0) // crop: all-nodata tiles dropped

@@ -316,14 +316,15 @@ object Similarity extends Serializable {
     import spark.implicits._
     val base = corpus.select(col(idCol).as("vid"), col(vecCol).as("v"))
       .as[(Long, Array[Float])].localCheckpoint(false)
-    val dim = base.head()._2.length
+    // the seed collect is the first action on the lazy checkpoint and
+    // scans every partition, so all of `base` is cached before the loop
+    val seed = base.orderBy($"vid").limit(ksub).collect().map(_._2)
+    val dim = seed(0).length
     require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
     val subDim = dim / m
-    var books: Array[Array[Array[Double]]] = {
-      val seed = base.orderBy($"vid").limit(ksub).collect().map(_._2)
+    var books: Array[Array[Array[Double]]] =
       Array.tabulate(m)(s => Array.tabulate(ksub)(c =>
         Array.tabulate(subDim)(j => seed(c)(s * subDim + j).toDouble)))
-    }
     def bestCode(bk: Array[Array[Double]], v: Array[Float], off: Int): Int = {
       var best = 0; var bestD = Double.MaxValue; var c = 0
       while (c < bk.length) {

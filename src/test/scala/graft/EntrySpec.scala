@@ -27,17 +27,17 @@ class EntrySpec extends AnyFunSuite {
   test("README quickstart flow: tif -> rect_clip -> rasterize(shp) -> edit -> write") {
     // the reference quickstart (README.md:36-60): Raster(tif) -> rect_clip
     // -> rasterize(shp) -> edit cells inside polygons -> write. Runs here
-    // end-to-end on the engine's own GeoTIFF reader and the REAL CA1
-    // shapefile (the reference's .tif is stripped from the snapshot, so
-    // the deterministic fixture DEM stands in for the pixel content).
+    // end-to-end on the engine's own GeoTIFF reader and the CA1 shapefile
+    // rebuilt from its FIXTURES.md decode (the reference's .tif is stripped
+    // from the snapshot, so the deterministic fixture DEM stands in for the
+    // pixel content).
     import org.apache.spark.sql.functions._
     import spark.implicits._
     import graft.core._
     import graft.corpus.Synth
     import graft.operators.{Rasterize, TileOps}
     import graft.sources.{AscIO, GeoTiffReader, GeoTiffWriter, ShpReader}
-    val shp = "/root/reference/hydro_raster/sample/CA1_overhead_features.shp"
-    assume(java.nio.file.Files.exists(java.nio.file.Paths.get(shp)))
+    val shp = getClass.getResource("/CA1_overhead_features.shp").getPath
     val dir = java.nio.file.Files.createTempDirectory("quickstart")
     val ref = Synth.demRef.withEpsg(27700)
     val data = Array.tabulate(ref.nrows * ref.ncols)(i =>

@@ -33,7 +33,7 @@ class MetricsSpec extends AnyFunSuite {
     val m = PipelineMetrics.register(spark)
     val cover = Rasterize.cover(spark, Synth.ca1Features, Synth.demRef, res,
       useAttr = true)
-    val salted = Rasterize.burnSalted(cover, Synth.demRef, salt = 4,
+    val salted = Rasterize.burn(cover, Synth.demRef, salt = 4,
       burnedPx = Some(m.cellsBurned))
     val n = salted.count()
     assert(n > 0)

@@ -18,16 +18,32 @@ class OperatorSpec extends AnyFunSuite {
 
   val res = 6
 
-  test("rasterize burn matches oracle exactly (cells, values, counts)") {
-    import graft.core.{Fixtures => F}
-    val got = Rasterize(spark, Synth.ca1Features, Synth.demRef, res, useAttr = true)
-      .collect().map(p => (p.row, p.col) -> p.v).toMap
-    val oracle = RefKernel.rasterize(Synth.demRef, Synth.ca1Features, useAttr = true)
-    val want = (for {
+  /** Burned pixels of the sequential oracle burn on Synth.demRef. */
+  private def oracleBurn(features: Seq[Feature]): Map[(Int, Int), Double] = {
+    val oracle = RefKernel.rasterize(Synth.demRef, features, useAttr = true)
+    (for {
       r <- 0 until Synth.demRef.nrows
       c <- 0 until Synth.demRef.ncols
       v = oracle(r, c) if !v.isNaN
     } yield (r, c) -> v).toMap
+  }
+
+  // 50 DISTINCT features (distinct burn values -> no exact-dup collapse)
+  // piled onto one cell: the skew the north rule calls out
+  private val hot = (0 until 50).map { i =>
+    val cx = Synth.demRef.left + 20.0 + i * 0.01
+    val cy = Synth.demRef.top - 20.0 - i * 0.01
+    Feature(i.toLong, "polygon",
+      Array(cx, cx + 5.0, cx + 5.0, cx, cx),
+      Array(cy - 5.0, cy - 5.0, cy, cy, cy - 5.0),
+      attr = i.toDouble, seq = i)
+  }
+
+  test("rasterize burn matches oracle exactly (cells, values, counts)") {
+    import graft.core.{Fixtures => F}
+    val got = Rasterize(spark, Synth.ca1Features, Synth.demRef, res, useAttr = true)
+      .collect().map(p => (p.row, p.col) -> p.v).toMap
+    val want = oracleBurn(Synth.ca1Features)
     assert(got.size == want.size, s"burned-cell count ${got.size} != ${want.size}")
     assert(got == want)
     assert(F.demRef == Synth.demRef) // fixtures stay in sync
@@ -113,30 +129,23 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("salted burn == plain burn (hot-cell skew split preserves last-wins)") {
-    val tasks = Rasterize.cover(spark, Synth.ca1Features, Synth.demRef, res, useAttr = true)
-    val plain = Rasterize.burn(tasks, Synth.demRef)
-      .collect().map(p => (p.row, p.col) -> p.v).toMap
-    for (salt <- Seq(2, 4, 7)) {
-      val salted = Rasterize.burnSalted(
-        Rasterize.cover(spark, Synth.ca1Features, Synth.demRef, res, useAttr = true),
-        Synth.demRef, salt)
-        .collect().map(p => (p.row, p.col) -> p.v).toMap
-      assert(salted == plain, s"salt=$salt")
+    // every salt reproduces the oracle's sequential burn, on the CA1
+    // fixture and on 50 overlapping features piled onto one cell
+    for (fixture <- Seq(Synth.ca1Features, hot)) {
+      val want = oracleBurn(fixture)
+      assert(want.nonEmpty)
+      for (salt <- Seq(1, 2, 4, 7)) {
+        val got = Rasterize.burn(
+          Rasterize.cover(spark, fixture, Synth.demRef, res, useAttr = true),
+          Synth.demRef, salt)
+          .collect().map(p => (p.row, p.col) -> p.v).toMap
+        assert(got == want, s"salt=$salt")
+      }
     }
   }
 
   test("skewed cover auto-selects the salted path; result == plain burn") {
-    // 50 DISTINCT features (distinct burn values -> no exact-dup collapse)
-    // piled onto one cell: the skew the north rule calls out
     val ref = Synth.demRef
-    val hot = (0 until 50).map { i =>
-      val cx = ref.left + 20.0 + i * 0.01
-      val cy = ref.top - 20.0 - i * 0.01
-      graft.core.Feature(i.toLong, "polygon",
-        Array(cx, cx + 5.0, cx + 5.0, cx, cx),
-        Array(cy - 5.0, cy - 5.0, cy, cy, cy - 5.0),
-        attr = i.toDouble, seq = i)
-    }
     assert(Rasterize.autoSalt(hot, ref, res, useAttr = true) > 1, "salted path not chosen")
     // homogeneous covers stay on the plain path
     assert(Rasterize.autoSalt(Synth.ca1Features, ref, res, useAttr = true) == 1)
@@ -166,16 +175,39 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("ClipPolygon with 1000 features == brute per-pixel mask (bbox prefilter is exact)") {
-    import spark.implicits._
     val ref = Synth.demRef
-    // 1000 small axis-aligned boxes scattered over the grid
+    val cs = ref.cellsize
+    def ring(cx: Double, cy: Double, a0: Double, radii: Seq[Double]): Feature = {
+      val n = radii.length
+      val xs = radii.indices.map(k => cx + radii(k) * math.cos(a0 + 2 * math.Pi * k / n))
+      val ys = radii.indices.map(k => cy + radii(k) * math.sin(a0 + 2 * math.Pi * k / n))
+      Feature(0L, "polygon", (xs :+ xs.head).toArray, (ys :+ ys.head).toArray, 1.0, 0)
+    }
+    // pixel-centre coordinates, so some edges and vertices sit exactly on
+    // pixel centres
+    def px(c: Int) = ref.left + (c + 0.5) * cs
+    def py(r: Int) = ref.top - (r + 0.5) * cs
     val feats = (0 until 1000).map { i =>
-      val x0 = ref.left + ((i * 37) % 745) * 1.0 + 0.2
-      val y0 = ref.bottom + ((i * 53) % 985) * 1.0 + 0.2
-      graft.core.Feature(i.toLong, "polygon",
-        Array(x0, x0 + 15.0, x0 + 15.0, x0, x0),
-        Array(y0, y0, y0 + 15.0, y0 + 15.0, y0),
-        attr = 1.0, seq = i)
+      val f =
+        if (i < 600) { // small axis-aligned boxes scattered over the grid
+          val x0 = ref.left + ((i * 37) % 745) * 1.0 + 0.2
+          val y0 = ref.bottom + ((i * 53) % 985) * 1.0 + 0.2
+          Feature(0L, "polygon", Array(x0, x0 + 15.0, x0 + 15.0, x0, x0),
+            Array(y0, y0, y0 + 15.0, y0 + 15.0, y0), 1.0, 0)
+        } else if (i < 850) // rotated pentagons: slanted edges
+          ring(ref.left + 20.3 + (i * 59) % 730, ref.bottom + 20.7 + (i * 71) % 970,
+            i * 0.61, Seq.fill(5)(6.0 + (i % 5) * 3))
+        else if (i < 950) // rotated five-point stars: concave, slanted
+          ring(ref.left + 25.1 + (i * 43) % 720, ref.bottom + 25.9 + (i * 67) % 960,
+            i * 0.29, Seq.tabulate(10)(k => if (k % 2 == 0) 24.0 else 9.0))
+        else { // L shapes with every vertex on a pixel centre
+          val (c0, r0) = ((i * 13) % 140, (i * 17) % 190)
+          Feature(0L, "polygon",
+            Array(px(c0), px(c0 + 8), px(c0 + 8), px(c0 + 3), px(c0 + 3), px(c0), px(c0)),
+            Array(py(r0 + 8), py(r0 + 8), py(r0 + 5), py(r0 + 5), py(r0), py(r0), py(r0 + 8)),
+            1.0, 0)
+        }
+      f.copy(featureId = i.toLong, seq = i)
     }
     val dem = TileOps.tileGrid(spark, ref, res)(Synth.demValue)
     val got = ClipPolygon(dem, ref, res, feats)
@@ -183,18 +215,16 @@ class OperatorSpec extends AnyFunSuite {
       .map(r => (r.getInt(0), r.getInt(1)) ->
         (if (r.isNullAt(2)) Double.NaN else r.getDouble(2)))
       .filterNot(_._2.isNaN).toMap
-    // brute oracle: PIP over ALL features per sampled pixel
+    // brute oracle: PIP over ALL features at every pixel
     var checkedIn = 0
     var checkedOut = 0
-    for (r <- 0 until ref.nrows by 7; c <- 0 until ref.ncols by 5) {
-      val px = ref.left + (c + 0.5) * ref.cellsize
-      val py = ref.top - (r + 0.5) * ref.cellsize
-      val inside = feats.exists(f => graft.core.RefKernel.pointInPolygon(px, py, f.xs, f.ys))
+    for (r <- 0 until ref.nrows; c <- 0 until ref.ncols) {
+      val inside = feats.exists(f => RefKernel.pointInPolygon(px(c), py(r), f.xs, f.ys))
       val v = Synth.demValue(r, c)
       if (inside && !v.isNaN) { assert(cells.get((r, c)).contains(v), s"($r,$c)"); checkedIn += 1 }
       else { assert(!cells.contains((r, c)), s"($r,$c) should be masked"); checkedOut += 1 }
     }
-    assert(checkedIn > 100 && checkedOut > 300, s"in=$checkedIn out=$checkedOut")
+    assert(checkedIn > 3000 && checkedOut > 10000, s"in=$checkedIn out=$checkedOut")
   }
 
   test("mosaic is deterministic under different partitioning (seam rule)") {

@@ -378,8 +378,8 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("shapefile reader reproduces the embedded CA1 fixture exactly") {
-    val path = "/root/reference/hydro_raster/sample/CA1_overhead_features.shp"
-    assume(Files.exists(Paths.get(path)))
+    // tools/make_ca1_shapefile.py writes this fixture from the decode
+    val path = getClass.getResource("/CA1_overhead_features.shp").getPath
     val got = ShpReader.readFeatures(path, "adjust_val")
     assert(got.size == 4)
     // ring coordinates match the FIXTURES.md decode byte-for-byte
