@@ -226,9 +226,13 @@ object Bench {
     // is bursty and one-sided (stalls only ever ADD time), so a single
     // sample can catch a multi-second steal window; the min estimates
     // steady-state operator cost. A query that throws is a failure: it is
-    // listed under "failed" and gives no time to the total.
+    // listed under "failed" and gives no time to the total. Fatal errors
+    // count too (a StackOverflowError while Catalyst plans one query must
+    // not abort the whole run), all but an interrupt.
     val timed = sorted.map { case (name, fn) =>
-      name -> scala.util.Try((1 to 2).map(_ => time(fn(s1, sfDir).count())._2).min)
+      name -> (try scala.util.Success((1 to 2).map(_ => time(fn(s1, sfDir).count())._2).min)
+        catch { case e: Throwable if !e.isInstanceOf[InterruptedException] =>
+          scala.util.Failure(e) })
     }
     val results = timed.collect { case (name, scala.util.Success(sec)) => name -> sec }
     val failed = timed.collect { case (name, scala.util.Failure(e)) =>

@@ -7,10 +7,11 @@ import org.apache.spark.sql.SparkSession
   * frozen driver contract. Times individual SparkEntry queries with a
   * per-job breakdown so optimization targets the right stage:
   *
-  *   sbt "runMain graft.BenchExtra q23_cdc_apply,s4_stream_join"
+  *   SPARK_GRAFT_EXTRA_QUERIES=q23_cdc_apply,s4_stream_join \
+  *     sbt "runMain graft.BenchExtra"
   *
-  * The comma-separated query list is the first argument, else
-  * SPARK_GRAFT_EXTRA_QUERIES, else every SparkEntry query.
+  * Unset SPARK_GRAFT_EXTRA_QUERIES times every SparkEntry query. The
+  * summary line per query gives its row count next to the times.
   * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32),
   * SPARK_GRAFT_EXTRA_REPS (timed reps after one warm pass, default 2),
   * SPARK_GRAFT_EXTRA_JOBS=1 to print every Spark job (wall, description).
@@ -44,7 +45,7 @@ object BenchExtra {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val reps = sys.env.getOrElse("SPARK_GRAFT_EXTRA_REPS", "2").toInt
     val logJobs = sys.env.contains("SPARK_GRAFT_EXTRA_JOBS")
-    val names = args.headOption.orElse(sys.env.get("SPARK_GRAFT_EXTRA_QUERIES"))
+    val names = sys.env.get("SPARK_GRAFT_EXTRA_QUERIES")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(SparkEntry.queries.keys.toSeq.sorted)
     val spark = Bench.session(cpus, coalesce = true)
@@ -74,20 +75,21 @@ object BenchExtra {
         throw new IllegalArgumentException(s"unknown query $name"))
       // one untimed warm pass (JIT/codegen/footers), as in Bench
       fn(spark, sfDir).count()
-      val secs = (1 to reps).map { r =>
+      val runs = (1 to reps).map { r =>
         jl.lines.clear()
         jl.enabled = logJobs
         val t0 = System.nanoTime()
-        fn(spark, sfDir).count()
+        val n = fn(spark, sfDir).count()
         val s = (System.nanoTime() - t0) / 1e9
         jl.enabled = false
         if (logJobs && r == reps) {
           println(f"  [$name rep$r] jobs:")
           jl.lines.forEach(println(_))
         }
-        s
+        (n, s)
       }
-      println(f"$name%-28s min=${secs.min}%7.3fs  reps=${secs.map(x => f"$x%.3f").mkString(",")}")
+      val secs = runs.map(_._2)
+      println(f"$name%-28s rows=${runs.map(_._1).distinct.mkString("/")}  min=${secs.min}%7.3fs  reps=${secs.map(x => f"$x%.3f").mkString(",")}")
     }
     spark.stop()
   }
