@@ -34,19 +34,14 @@ object IceLite {
   /** Bounded wait for an [[org.apache.spark.sql.Observation]]'s metrics
     * (they are delivered on the async listener bus just after the
     * observed action returns); empty map on timeout so callers can fall
-    * back to a separate aggregate pass instead of hanging. */
+    * back to a separate aggregate pass instead of hanging. It waits on
+    * the observation's own future, so a timeout leaves no thread blocked. */
   private def awaitMetrics(
       obs: org.apache.spark.sql.Observation): Map[String, Any] = {
-    import scala.concurrent.{Await, Future}
+    import scala.concurrent.Await
     import scala.concurrent.duration._
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val t0 = System.nanoTime()
-    val r: Map[String, Any] =
-      try Await.result(Future(obs.get), 10.seconds)
-      catch { case _: java.util.concurrent.TimeoutException => Map.empty }
-    if (sys.env.contains("SPARK_GRAFT_OBS_DEBUG"))
-      System.err.println(f"[obs-wait] ${(System.nanoTime()-t0)/1e6}%.1f ms")
-    r
+    try { Await.ready(obs.future, 10.seconds); obs.get }
+    catch { case _: java.util.concurrent.TimeoutException => Map.empty }
   }
 
   private def q(s: String) = "\"" + s + "\""

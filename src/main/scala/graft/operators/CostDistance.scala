@@ -35,6 +35,10 @@ object CostDistance {
 
   private val INF = Double.PositiveInfinity
 
+  /** Round cap of [[tilesDist]]: a guard against a non-converging
+    * relaxation, far above any grid's real round count. */
+  private val MaxRounds = 10000
+
   /** One tile-local exact Dijkstra over current estimates.
     * `pfD`: padded dist estimates; `pfQ`: padded cost surface. */
   private def localDijkstra(pfD: Stencil.Padded, pfQ: Stencil.Padded): Array[Double] = {
@@ -121,7 +125,7 @@ object CostDistance {
     * surface is NaN, +inf where unreachable). `isSource` marks zero-cost
     * seed cells on the cost surface. */
   def tilesDist(cost: Dataset[Tile], ref: GridRef, res: Int,
-      isSource: Double => Boolean, maxRounds: Int = 10000): Dataset[Tile] = {
+      isSource: Double => Boolean): Dataset[Tile] = {
     import cost.sparkSession.implicits._
     val pfQ = Stencil.padded(cost, ref, res).localCheckpoint(false)
     try {
@@ -136,7 +140,7 @@ object CostDistance {
       var changed = 1L
       while (changed > 0) {
         rounds += 1
-        require(rounds <= maxRounds, s"costDistance did not converge in $maxRounds rounds")
+        require(rounds <= MaxRounds, s"costDistance did not converge in $MaxRounds rounds")
         val pfD = Stencil.padded(state, ref, res)
         // lazy checkpoint of the (tile, changed) pairs: the convergence
         // agg below is the round's ONLY job — it materializes (and
@@ -172,9 +176,9 @@ object CostDistance {
     * valid cell (unreachable and NaN cells are omitted). Distances are
     * exact integers when the cost surface is integer-valued. */
   def accumulate(cost: Dataset[Tile], ref: GridRef, res: Int,
-      isSource: Double => Boolean, maxRounds: Int = 10000): DataFrame = {
+      isSource: Double => Boolean): DataFrame = {
     import cost.sparkSession.implicits._
-    tilesDist(cost, ref, res, isSource, maxRounds).flatMap { t =>
+    tilesDist(cost, ref, res, isSource).flatMap { t =>
       val out = Array.newBuilder[(Long, Long, Double)]
       var i = 0
       while (i < t.payload.length) {
@@ -242,9 +246,9 @@ object CostDistance {
   /** `(row, col, dir)` backlink rows for every reachable valid cell —
     * dir 0 = source, 1..8 = [[D8]] predecessor direction. */
   def backlink(cost: Dataset[Tile], ref: GridRef, res: Int,
-      isSource: Double => Boolean, maxRounds: Int = 10000): DataFrame = {
+      isSource: Double => Boolean): DataFrame = {
     import cost.sparkSession.implicits._
-    val d = tilesDist(cost, ref, res, isSource, maxRounds)
+    val d = tilesDist(cost, ref, res, isSource)
     backlinkTiles(d, cost, ref, res).flatMap { t =>
       val out = Array.newBuilder[(Long, Long, Long)]
       var i = 0
@@ -274,11 +278,11 @@ object CostDistance {
     * family as a few extra halo sweeps of the converged solve. */
   def leastCostPath(cost: Dataset[Tile], ref: GridRef, res: Int,
       isSource: Double => Boolean, targetRow: Int, targetCol: Int,
-      maxRounds: Int = 10000, driverLimit: Int = 2000000): DataFrame = {
+      driverLimit: Int = 2000000): DataFrame = {
     val spark = cost.sparkSession
     import spark.implicits._
     val ncols = ref.ncols
-    val distT = tilesDist(cost, ref, res, isSource, maxRounds)
+    val distT = tilesDist(cost, ref, res, isSource)
     // (id, dist, to, steps): to = 1-step predecessor (self at sources),
     // steps = 0 at sources else 1
     val blT = backlinkTiles(distT, cost, ref, res)

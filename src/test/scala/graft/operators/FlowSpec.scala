@@ -264,14 +264,17 @@ class FlowSpec extends AnyFunSuite {
       assert(got.size == want.size, s"res=$res size")
       assert(got == want.toMap, s"res=$res values")
     }
-    // both head-resolution branches agree: force the distributed
-    // pointer-doubling loop and compare
+    // mixed arms: the chain-head chase collects one row per stream cell,
+    // the junction forest one per node (in-degree != 1). A driverLimit of
+    // the node count sends the heads through pointer doubling and keeps
+    // the forest on the driver.
+    val nodes = stream.count(s => parents.getOrElse(s, Seq.empty).length != 1)
+    assert(nodes < stream.size, s"driverLimit $nodes does not separate the two solves")
     val tiles6 = TileOps.tileGrid(spark, ref, 6)(Synth.demValue)
-    val dist = Flow.strahlerOrder(tiles6, ref, 6, threshold,
-        headsViaDoubling = true)
+    val mixed = Flow.strahlerOrder(tiles6, ref, 6, threshold, driverLimit = nodes)
       .collect()
       .map(r => (r.getLong(0).toInt, r.getLong(1).toInt) -> r.getLong(2)).toMap
-    assert(dist == want.toMap, "distributed branch diverges from driver chase")
+    assert(mixed == want.toMap, "distributed heads + driver forest diverge from the oracle")
   }
 
   test("streamNetwork: edges are exactly the acc>=T sources; targets follow dir") {
@@ -390,30 +393,44 @@ class FlowSpec extends AnyFunSuite {
   }
 
   test("distributed condensed solves (driverLimit=0) == driver solves, all four ops") {
-    // driverLimit=0 forces the ABOVE-LIMIT branch on the small fixture:
-    // flowAcc/longestUpstream run the distributed batched topological
-    // peel, downstream/nearestDrainage the pointer-doubling carry
-    // resolve. Outputs must be IDENTICAL to the driver-solve path (which
-    // the tests above gate against driver-global oracles).
-    val ref = Synth.demRef
-    val tiles = TileOps.tileGrid(spark, ref, 4)(Synth.demValue)
+    // driverLimit=0 forces the distributed arm of both shared kernels:
+    // flowAcc, longestUpstream and the Strahler junction forest run the
+    // batched topological peel, downstream, nearestDrainage and the
+    // Strahler chain heads the pointer-doubling chase. Outputs must be
+    // IDENTICAL to the driver arms (which the tests above gate against
+    // driver-global oracles).
     // multiset compare (row -> count): a Set would mask duplicated rows
     // from a frontier fan-out regression in the distributed branches
     def m(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (0 until r.length).map(r.get).toSeq)
         .groupBy(identity).map { case (k, v) => (k, v.size) }
-    assert(m(Flow.flowAcc(tiles, ref, 4, driverLimit = 0)) ==
-      m(Flow.flowAcc(tiles, ref, 4)), "flowAcc")
-    assert(m(Flow.downstream(tiles, ref, 4, driverLimit = 0)) ==
-      m(Flow.downstream(tiles, ref, 4)), "downstream")
-    assert(m(Flow.longestUpstream(tiles, ref, 4, driverLimit = 0)) ==
-      m(Flow.longestUpstream(tiles, ref, 4)), "longestUpstream")
-    assert(m(Flow.nearestDrainage(tiles, ref, 4, threshold = 25L, driverLimit = 0)) ==
-      m(Flow.nearestDrainage(tiles, ref, 4, threshold = 25L)), "nearestDrainage")
-    // strahler: driverLimit=0 forces BOTH the chain-head pointer doubling
-    // AND the distributed junction-forest peel
-    assert(m(Flow.strahlerOrder(tiles, ref, 4, threshold = 25L, driverLimit = 0)) ==
-      m(Flow.strahlerOrder(tiles, ref, 4, threshold = 25L)), "strahler")
+    // the DEM fixture, and a seeded noise grid (the fillSinks randomized
+    // generator) whose NaN holes and many pits end routing rows at pits,
+    // NaN borders and stream stops
+    val rnd = new scala.util.Random(42)
+    val nr = 90 + rnd.nextInt(80)
+    val nc = 90 + rnd.nextInt(80)
+    val noiseRef = GridRef(ncols = nc, nrows = nr, xll = 0, yll = 0, cellsize = 1, nodata = -9999)
+    val vals = Array.tabulate(nr * nc) { _ =>
+      if (rnd.nextInt(23) == 0) Double.NaN else rnd.nextInt(4000) / 4.0
+    }
+    for ((name, ref, res, f, threshold) <- Seq(
+        ("dem", Synth.demRef, 4, Synth.demValue _, 25L),
+        ("noise", noiseRef, 5, (r: Int, c: Int) => vals(r * nc + c), 4L))) {
+      val tiles = TileOps.tileGrid(spark, ref, res)(f)
+      assert(m(Flow.flowAcc(tiles, ref, res, driverLimit = 0)) ==
+        m(Flow.flowAcc(tiles, ref, res)), s"$name flowAcc")
+      assert(m(Flow.downstream(tiles, ref, res, driverLimit = 0)) ==
+        m(Flow.downstream(tiles, ref, res)), s"$name downstream")
+      assert(m(Flow.longestUpstream(tiles, ref, res, driverLimit = 0)) ==
+        m(Flow.longestUpstream(tiles, ref, res)), s"$name longestUpstream")
+      val nearest = m(Flow.nearestDrainage(tiles, ref, res, threshold))
+      assert(nearest.nonEmpty, s"$name has no stream cells")
+      assert(m(Flow.nearestDrainage(tiles, ref, res, threshold, driverLimit = 0)) ==
+        nearest, s"$name nearestDrainage")
+      assert(m(Flow.strahlerOrder(tiles, ref, res, threshold, driverLimit = 0)) ==
+        m(Flow.strahlerOrder(tiles, ref, res, threshold)), s"$name strahler")
+    }
   }
 
   test("flow routing scale smoke: 2048x2048 grid, condensed solve stays O(perimeter)") {
